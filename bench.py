@@ -61,7 +61,7 @@ def _child_pythonpath() -> str:
     SPARK_HOME distribution layout) and every subprocess then dies on
     `import pyspark` (round-5 review)."""
     inherited = os.environ.get("PYTHONPATH", "")
-    root = str(Path(__file__).parent)
+    root = str(Path(__file__).resolve().parent)
     return f"{root}{os.pathsep}{inherited}" if inherited else root
 
 

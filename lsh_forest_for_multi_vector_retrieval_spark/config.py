@@ -40,18 +40,9 @@ class DedupConfig:
 
     # --- verification ---
     jaccard_threshold: float = 0.8
-    # Semi-join-prune the signature table to docs that appear in at least
-    # one candidate pair before the verify joins. Candidate docs are a
-    # small fraction of the corpus (dedup selectivity), so this turns
-    # "shuffle every shingle array in the corpus through a sort-merge
-    # join" into "broadcast a set of ids and probe the signature scan in
-    # place" — measured 60.8 s -> ~4 s for the verify stage at 320k docs
-    # on 4 cores. The broadcast is 8 bytes/candidate-doc (~80 MB at 10M
-    # candidate docs); disable for corpora where candidate docs approach
-    # the corpus itself (the unpruned plan shuffles sigs once instead).
-    verify_prune_candidates: bool = True
-    # Candidate-id sets up to this size are broadcast for the prune's
-    # semi-join; above it (duplicate-dense corpora — boilerplate-heavy
+    # Candidate-id sets up to this size are broadcast for verify's prune
+    # (the signature table semi-joined down to candidate docs, verify.py);
+    # above it (duplicate-dense corpora — boilerplate-heavy
     # crawls where most docs appear in some pair) the prune falls back to
     # a shuffle semi-join of the slim id column instead of force-feeding
     # a multi-GB LongHashedRelation past the autoBroadcastJoinThreshold
@@ -85,7 +76,7 @@ class DedupConfig:
     # Flagship band strategy: False = fixed-depth bands + max_bucket_docs
     # cap (default; the cap ledger records drops), True = variable-depth
     # adaptive_band_table (deepen hot buckets instead of capping them).
-    # tools/adaptive_ab.py A/Bs the two on a boilerplate-heavy corpus.
+    # ADAPTIVE_AB.json A/Bs the two on a boilerplate-heavy corpus.
     use_adaptive_bands: bool = False
     # Minimum RESERVED permutation rows guaranteed to the adaptive path:
     # deepened bucket keys draw extra MinHash rows from positions past the

@@ -1,7 +1,6 @@
 """Dense-vector scalar functions.
 
-Reference analog: the exact-distance layer (Hamming default,
-/root/reference/src/shared/lsh_forest.py:86; dot-product distances in the
+Reference analog: the exact-distance layer (dot-product distances in the
 chamfer notebooks — vectorized with ``@`` in
 /root/reference/src/shared/utils.py:31-34).
 
@@ -11,7 +10,7 @@ Two implementations with one semantics:
   expressions. JVM-side and shuffle-free, but higher-order-function
   lambdas are INTERPRETED per element, not whole-stage-codegen'd
   (measured: F.aggregate 2.49s vs 0.49s for the NumPy kernel on the
-  minhash A/B, tools/minhash_ab.py; the IVF assignment GEMM rewrite,
+  minhash A/B, functions/minhash.py; the IVF assignment GEMM rewrite,
   ann.py). They remain the ORACLE path: a strict left-to-right fold is
   bit-reproducible everywhere, which is what lets expected-parquet
   fixtures hash-match.
@@ -67,12 +66,6 @@ def l2_sq_col(a: Column, b: Column) -> Column:
         a, b, lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))
     )
     return F.aggregate(diffs, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def hamming_col(a: Column, b: Column) -> Column:
-    """Hamming distance between packed 64-bit signatures (the reference's
-    default dist, lsh_forest.py:86) — one xor + popcount."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def _stack_pair_batch(

@@ -32,22 +32,18 @@ def chamfer_scores(
     vec_col: str = "embedding",
     q_vec_col: str = "embedding",
     quantize_digits: int | None = None,
-    q_idx_col: str | None = None,
+    *,
+    q_idx_col: str,
 ) -> DataFrame:
     """(doc_id, chamfer) where chamfer = sum over query vectors of the max
     dot product against the doc's vectors (utils.py:27-35 semantics).
 
-    ``q_idx_col``: a caller-supplied per-query-vector id column (the
-    plaid_topk convention) — pass it whenever one exists, which removes
-    the only unpartitioned window in the operator layer (round-5 VERDICT
-    "What's wrong" #2). Any distinct ids are equivalent: q_idx is purely
-    a grouping key for the per-vector max, so every bijective reindexing
-    yields the identical score. Without it, q_idx falls back to a
-    row_number over the vector-ordered query set — NOT
-    monotonically_increasing_id, which varies with partitioning and would
-    break fixture-oracle determinism (the engine's own rule). The query
-    side is the broadcast-tiny side, so the fallback's single-partition
-    window is a few rows, never corpus-sized.
+    ``q_idx_col``: the per-query-vector id column (the plaid_topk
+    convention). Any distinct ids are equivalent: q_idx is purely a
+    grouping key for the per-vector max, so every bijective reindexing
+    yields the identical score. Required rather than derived: deriving
+    one deterministically needs a global (single-partition) window over
+    the query set.
 
     ``quantize_digits=d`` switches to the ORACLE-EXACT mode: each dot is
     rounded to ``d`` decimals and held as an integer in ``10^-d`` units,
@@ -55,22 +51,25 @@ def chamfer_scores(
     ``chamfer`` in micro-units for d=6) hash-matches any engine that
     computes the same left-to-right fold — float summation order can no
     longer produce ulp drift after the per-dot round."""
-    if q_idx_col is not None:
-        q = query_vectors.select(
-            F.col(q_idx_col).alias("q_idx"), F.col(q_vec_col).alias("q_vec")
-        )
-    else:
-        q = query_vectors.select(
-            (F.row_number().over(Window.orderBy(F.col(q_vec_col))) - 1).alias("q_idx"),
-            F.col(q_vec_col).alias("q_vec"),
-        )
+    q = query_vectors.select(
+        F.col(q_idx_col).alias("q_idx"), F.col(q_vec_col).alias("q_vec")
+    )
     d = doc_vectors.select(F.col(doc_col).alias("doc_id"), F.col(vec_col).alias("d_vec"))
     dot = dot_col(F.col("d_vec"), F.col("q_vec"))
     if quantize_digits is not None:
         dot = F.round(dot * F.lit(float(10**quantize_digits))).cast("long")
     dots = d.join(F.broadcast(q)).select("doc_id", "q_idx", dot.alias("dot"))
     per_q = dots.groupBy("doc_id", "q_idx").agg(F.max("dot").alias("best"))
-    return per_q.groupBy("doc_id").agg(F.sum("best").alias("chamfer"))
+    if quantize_digits is not None:
+        return per_q.groupBy("doc_id").agg(F.sum("best").alias("chamfer"))
+    # a float sum depends on the order of its terms, and their arrival
+    # order follows the query side's partitioning: add the per-vector
+    # maxima in sorted order so the score depends on their values alone
+    best = F.array_sort(F.collect_list("best"))
+    total = F.aggregate(best, F.lit(0.0), lambda acc, x: acc + x)
+    return per_q.groupBy("doc_id").agg(
+        F.when(F.size(best) > 0, total).alias("chamfer")
+    )
 
 
 def chamfer_distance(

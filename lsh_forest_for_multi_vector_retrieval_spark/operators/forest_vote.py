@@ -15,10 +15,8 @@ Scoring stages (forest_vote.py:290-338 ``query``):
   -> per-tree max-normalize (window)  [:309-315]
   -> sum over trees                   [:329-332 analog]
   -> per-query max-normalize (window) [:322-327]
-Depth weights (``_depth_weight``, :156-166): exponential gamma^l,
-linear (l+1)/(L+1), logistic 1/(1+exp(alpha*(k-l))).
-Popularity weight (``_popularity_weight``, :168-173):
-log1p(n_docs/|docs at node|)^beta.
+Depth weight: exponential gamma^l. Popularity weight:
+log1p(n_docs/|docs at node|)^beta. Both use the reference defaults.
 """
 
 from __future__ import annotations
@@ -77,39 +75,24 @@ def prefix_table(
     ).select("doc_id", "e.band_id", "e.depth", "e.prefix_hash")
 
 
-def depth_weight_col(depth, scheme: str, max_depth: int, gamma: float, alpha: float):
-    if scheme == "exponential":
-        return F.pow(F.lit(gamma), depth.cast("double"))
-    if scheme == "linear":
-        return F.least(
-            (depth.cast("double") + 1.0) / (max_depth + 1.0), F.lit(1.0)
-        )
-    if scheme == "logistic":
-        k = max_depth / 2.0
-        return 1.0 / (1.0 + F.exp(F.lit(alpha) * (F.lit(k) - depth.cast("double"))))
-    raise ValueError(f"unknown depth-weight scheme: {scheme}")
+# reference defaults of the exponential depth weight gamma^l and the
+# popularity IDF exponent (``_depth_weight`` / ``_popularity_weight``,
+# forest_vote.py:156-173)
+GAMMA = 0.8
+BETA = 0.4
 
 
 def forest_vote_scores(
     corpus_sigs: DataFrame,
     query_sigs: DataFrame,
     cfg: DedupConfig = DedupConfig(),
-    scheme: str = "exponential",
-    gamma: float = 0.8,
-    alpha: float = 0.5,
-    beta: float = 0.4,
-    use_popularity: bool = True,
-    skip_root: bool = True,
-    weight_floor: float = 0.0,
     max_node_docs: int | None = 512,
 ) -> DataFrame:
     """(query_id, doc_id, score): depth-weighted, popularity-penalized,
     per-tree- and per-query-normalized vote scores.
 
-    ``skip_root`` (forest_vote.py:279-280) drops depth-0; here depth
-    starts at 1, so it filters nothing unless disabled semantics change.
-    ``weight_floor`` (forest_vote.py:202-204) prunes negligible weights
-    — a pushed-down predicate.
+    The reference's depth-0 root skip (forest_vote.py:279-280) needs no
+    filter here: ``prefix_table`` depths start at 1.
     ``max_node_docs`` is the reference's F5 pivot cap (lsh_forest.py:
     117-119: a node caches <=k pivots, so an overfull node never
     enumerates its full membership): trie nodes holding more than this
@@ -163,20 +146,12 @@ def forest_vote_scores(
         "query_id", "doc_id", "band_id", F.col("m.depth").alias("depth"),
         F.col("m.node_docs").alias("node_docs"),
     )
-    if skip_root:
-        scored = scored.where(F.col("depth") >= 1)
-
-    w = depth_weight_col(F.col("depth"), scheme, cfg.rows_per_band, gamma, alpha)
-    if weight_floor > 0.0:
-        scored = scored.where(w > weight_floor)
-    if use_popularity:
-        pop = F.pow(
-            F.log1p(F.lit(float(n_docs)) / F.coalesce(F.col("node_docs"), F.lit(1)).cast("double")),
-            F.lit(beta),
-        )
-        contrib = (w * pop).alias("contrib")
-    else:
-        contrib = w.alias("contrib")
+    w = F.pow(F.lit(GAMMA), F.col("depth").cast("double"))
+    pop = F.pow(
+        F.log1p(F.lit(float(n_docs)) / F.coalesce(F.col("node_docs"), F.lit(1)).cast("double")),
+        F.lit(BETA),
+    )
+    contrib = (w * pop).alias("contrib")
     per_tree = scored.select("query_id", "doc_id", "band_id", contrib)
 
     # per-tree max-normalization (forest_vote.py:309-315)

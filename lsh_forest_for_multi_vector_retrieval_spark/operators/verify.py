@@ -33,23 +33,22 @@ from lsh_forest_for_multi_vector_retrieval_spark.config import DedupConfig
 def _join_shingles(
     pairs: DataFrame,
     docs: DataFrame,
-    id_col: str = "doc_id",
-    prune: bool = True,
-    max_broadcast_ids: int = 10_000_000,
-    materialize_pairs: bool = True,
+    cfg: DedupConfig,
+    id_col: str,
+    materialize_pairs: bool,
 ) -> DataFrame:
-    """Attach each side's shingle set (and simhash when present).
+    """Attach each side's shingle set (and simhash when present), then
+    apply ``cfg``'s optional SimHash prefilter.
 
-    With ``prune`` (default), ``docs`` is first semi-joined down to the
-    ids that appear in at least one pair: candidate docs are a small
-    fraction of the corpus, and without the prune the second pair join
+    ``docs`` is first semi-joined down to the ids that appear in at least
+    one pair: candidate docs are a small fraction of the corpus, and
+    without the prune the second pair join
     exceeds the broadcast threshold and SHUFFLES the full signature
     table's shingle arrays through a sort-merge join (measured: the
     verify stage was 60.8 s of a 133 s four-core flagship pass at 320k
     docs — ~0.6 GB of arrays shuffled to verify 10k pairs; pruned: the
     id set broadcasts and the signature scan is probed in place). The
-    broadcast is COUNT-GATED (``max_broadcast_ids``, from
-    ``DedupConfig.verify_prune_max_ids``): on duplicate-dense corpora
+    broadcast is COUNT-GATED (``DedupConfig.verify_prune_max_ids``): on duplicate-dense corpora
     where candidate docs approach the corpus itself, the explicit hint
     would force a multi-GB hash relation past the
     autoBroadcastJoinThreshold, so oversized id sets fall back to a
@@ -68,7 +67,7 @@ def _join_shingles(
     ContextCleaner-released; same pattern as dedup.simhash/ann). That
     makes this call a blocking action for uncached inputs. Callers whose
     ``pairs`` is ALREADY cheap to traverse twice — persisted
-    (``minhash_dedup(persist_intermediates=True)``, streaming) or a bare
+    (``minhash_dedup``, streaming) or a bare
     checkpointed-parquet scan (``plans.pipeline``) — skip it: persisted
     inputs via the storageLevel check, parquet-backed OR
     already-localCheckpointed ones via ``materialize_pairs=False``
@@ -79,35 +78,34 @@ def _join_shingles(
     pre-checkpoints MUST pass ``materialize_pairs=False`` itself or pay
     a redundant second checkpoint copy.
     """
-    if prune:
-        if materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
-            pairs = pairs.localCheckpoint(eager=True)
-        cand_ids = (
-            pairs.select(F.col("doc_a").alias(id_col))
-            .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-        )
-        # Gate on a SHUFFLE-FREE upper bound first: each pair contributes
-        # at most two ids, so 2*|pairs| >= |cand_ids|. One cheap count of
-        # the slim (checkpointed / parquet-backed) pair table instead of
-        # materializing the distinct twice — the exact-count variant
-        # measurably cost the 4-core scaling leg ~2 s of serial driver
-        # time (two extra job launches + a checkpointed shuffle) at 320k
-        # docs. When the bound is exceeded, do NOT give up on the
-        # broadcast yet: on duplicate-dense corpora (one hot cluster of
-        # 50k docs can emit millions of pairs) the DISTINCT id set may
-        # still be tiny, and the shuffle fallback would exchange the full
-        # signature table's shingle arrays — the exact shuffle the prune
-        # exists to avoid. Materialize the slim distinct once and gate on
-        # its exact count; the extra action only runs in the oversized
-        # case, where its cost is dwarfed by either downstream plan.
-        if 2 * pairs.count() <= max_broadcast_ids:
+    if materialize_pairs and pairs.storageLevel == StorageLevel.NONE:
+        pairs = pairs.localCheckpoint(eager=True)
+    cand_ids = (
+        pairs.select(F.col("doc_a").alias(id_col))
+        .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
+        .distinct()
+    )
+    # Gate on a SHUFFLE-FREE upper bound first: each pair contributes
+    # at most two ids, so 2*|pairs| >= |cand_ids|. One cheap count of
+    # the slim (checkpointed / parquet-backed) pair table instead of
+    # materializing the distinct twice — the exact-count variant
+    # measurably cost the 4-core scaling leg ~2 s of serial driver
+    # time (two extra job launches + a checkpointed shuffle) at 320k
+    # docs. When the bound is exceeded, do NOT give up on the
+    # broadcast yet: on duplicate-dense corpora (one hot cluster of
+    # 50k docs can emit millions of pairs) the DISTINCT id set may
+    # still be tiny, and the shuffle fallback would exchange the full
+    # signature table's shingle arrays — the exact shuffle the prune
+    # exists to avoid. Materialize the slim distinct once and gate on
+    # its exact count; the extra action only runs in the oversized
+    # case, where its cost is dwarfed by either downstream plan.
+    if 2 * pairs.count() <= cfg.verify_prune_max_ids:
+        cand_ids = F.broadcast(cand_ids)
+    else:
+        cand_ids = cand_ids.localCheckpoint(eager=True)
+        if cand_ids.count() <= cfg.verify_prune_max_ids:
             cand_ids = F.broadcast(cand_ids)
-        else:
-            cand_ids = cand_ids.localCheckpoint(eager=True)
-            if cand_ids.count() <= max_broadcast_ids:
-                cand_ids = F.broadcast(cand_ids)
-        docs = docs.join(cand_ids, id_col, "left_semi")
+    docs = docs.join(cand_ids, id_col, "left_semi")
     cols = ["shingles"] + (["simhash"] if "simhash" in docs.columns else [])
     a = docs.select(
         F.col(id_col).alias("doc_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
@@ -115,7 +113,10 @@ def _join_shingles(
     b = docs.select(
         F.col(id_col).alias("doc_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
     )
-    return pairs.join(a, "doc_a").join(b, "doc_b")
+    joined = pairs.join(a, "doc_a").join(b, "doc_b")
+    if cfg.simhash_prefilter_max_hamming is not None and "simhash" in cols:
+        joined = simhash_prefilter(joined, cfg.simhash_prefilter_max_hamming)
+    return joined
 
 
 def simhash_prefilter(joined: DataFrame, max_hamming: int) -> DataFrame:
@@ -139,18 +140,8 @@ def verify_pairs(
     (the checkpointed pipeline) so a cheap re-scan isn't copied into
     block-manager storage."""
     joined = _join_shingles(
-        pairs,
-        docs_with_shingles,
-        id_col,
-        prune=cfg.verify_prune_candidates,
-        max_broadcast_ids=cfg.verify_prune_max_ids,
-        materialize_pairs=materialize_pairs,
+        pairs, docs_with_shingles, cfg, id_col, materialize_pairs
     )
-    if (
-        cfg.simhash_prefilter_max_hamming is not None
-        and "simhash_a" in joined.columns
-    ):
-        joined = simhash_prefilter(joined, cfg.simhash_prefilter_max_hamming)
     inter = F.size(F.array_intersect("shingles_a", "shingles_b"))
     union = F.size("shingles_a") + F.size("shingles_b") - inter
     out = joined.select(
@@ -193,18 +184,8 @@ def verify_pairs_pandas(
     exactly like the JVM path's when/otherwise.
     """
     joined = _join_shingles(
-        pairs,
-        docs_with_shingles,
-        id_col,
-        prune=cfg.verify_prune_candidates,
-        max_broadcast_ids=cfg.verify_prune_max_ids,
-        materialize_pairs=materialize_pairs,
+        pairs, docs_with_shingles, cfg, id_col, materialize_pairs
     )
-    if (
-        cfg.simhash_prefilter_max_hamming is not None
-        and "simhash_a" in joined.columns
-    ):
-        joined = simhash_prefilter(joined, cfg.simhash_prefilter_max_hamming)
     joined = joined.withColumn(
         "grp", F.pmod(F.xxhash64("doc_a", "doc_b"), F.lit(num_groups))
     )

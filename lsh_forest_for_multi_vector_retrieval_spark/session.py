@@ -54,8 +54,9 @@ def get_spark(
         # candidate-pair / verified tables cache in shuffle_partitions
         # slivers and every downstream action (CC gate count, cluster
         # count) launches one near-empty task per sliver — measured ~12 s
-        # of latency-bound stages per flagship pass at local[4]
-        # (tools/stage_metrics_probe.py), pure Amdahl floor at any scale
+        # of latency-bound stages per flagship pass at local[4] (a per-stage
+        # probe; `perfbench/run.py --trace 1` now reports it per layer),
+        # pure Amdahl floor at any scale
         .config(
             "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
             "true",

@@ -127,22 +127,6 @@ def test_simhash_pairs_catch_exact_dups(corpus):
     assert missing == 0  # hamming 0 pairs always blocked together
 
 
-def test_unpersisted_path_matches_and_checkpoints_pairs(result, corpus):
-    """Round-5 review: with persist_intermediates=False the verify
-    prune's two traversals of the pair plan must NOT each re-run the
-    band/bucket chain — verify_pairs materializes the slim pair table
-    once (eager localCheckpoint) for uncached inputs. Results identical
-    to the persisted path; the verified plan reads a checkpointed RDD
-    scan, not a second band chain."""
-    res = minhash_dedup(corpus, CFG, persist_intermediates=False)
-    r1 = result.verified.select("doc_a", "doc_b", "jaccard")
-    r2 = res.verified.select("doc_a", "doc_b", "jaccard")
-    assert r1.exceptAll(r2).count() == 0
-    assert r2.exceptAll(r1).count() == 0
-    plan = res.verified._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan, plan
-
-
 def test_idempotent_rerun(corpus):
     # same input -> identical verified pairs (determinism across runs;
     # north_rule reproducibility)

@@ -199,9 +199,10 @@ def test_connected_components_long_chain(spark):
 
 
 def test_connected_components_paths_agree(spark):
-    # the size-gated driver union-find and the distributed hash-min loop
-    # must produce the identical labeling (cluster_id = component min) on a
-    # graph with chains, merges, duplicate + reversed edges, and self-loops
+    # the size-gated driver union-find and the distributed star
+    # contraction must produce the identical labeling (cluster_id =
+    # component min) on a graph with chains, merges, duplicate + reversed
+    # edges, and self-loops
     import random
 
     rng = random.Random(7)
@@ -211,28 +212,23 @@ def test_connected_components_paths_agree(spark):
     edges_py += [(b, a) for a, b in edges_py[:10]] + [(300, 300)]
     edges = spark.createDataFrame(edges_py, "doc_a long, doc_b long")
     driver = connected_components(edges)  # gate: tiny -> union-find
-    for algo in ("star", "hashmin"):
-        dist = connected_components(
-            edges, driver_max_edges=0, algorithm=algo
-        )  # forced distributed loop
-        assert driver.exceptAll(dist).count() == 0, algo
-        assert dist.exceptAll(driver).count() == 0, algo
+    dist = connected_components(edges, driver_max_edges=0)  # forced star
+    assert driver.exceptAll(dist).count() == 0
+    assert dist.exceptAll(driver).count() == 0
 
 
 def test_star_contraction_is_diameter_robust(spark):
     # a 2,000-vertex path has diameter 2,000: hash-min would need 2,000
     # rounds, the star contraction must finish in O(log^2 n) — and still
     # label every vertex with the component min (round-2 VERDICT #4; the
-    # >=1M-edge artifact is tools/cc_stress.py -> CC_STRESS.json)
+    # >=1M-edge run is recorded in CC_STRESS.json)
     n = 2000
     edges = (
         spark.range(n - 1)
         .selectExpr("id as doc_a", "id + 1 as doc_b")
     )
     stats = {}
-    got = connected_components(
-        edges, driver_max_edges=0, algorithm="star", stats=stats
-    )
+    got = connected_components(edges, driver_max_edges=0, stats=stats)
     assert stats["strategy"] == "star"
     assert stats["rounds"] <= 25, stats
     assert got.count() == n
@@ -423,10 +419,10 @@ def test_candidate_pairs_unchanged_by_salting(sigs):
 )
 def test_cc_strategies_match_union_find_oracle(spark, edges_py):
     """Property check on the core clusterer: on arbitrary small graphs
-    (self-loops, duplicates, reversed edges, disconnected vertices) all
-    three physical strategies — driver union-find, distributed star
-    contraction, distributed hash-min — must label every vertex with its
-    component MINIMUM, per an independent test-local union-find."""
+    (self-loops, duplicates, reversed edges, disconnected vertices) both
+    physical strategies — driver union-find and distributed star
+    contraction — must label every vertex with its component MINIMUM,
+    per an independent test-local union-find."""
     parent = {}
 
     def find(x):
@@ -447,32 +443,21 @@ def test_cc_strategies_match_union_find_oracle(spark, edges_py):
         r.doc_id: r.cluster_id for r in connected_components(edges).collect()
     }
     assert got_driver == expect
-    for algo in ("star", "hashmin"):
-        got = {
-            r.doc_id: r.cluster_id
-            for r in connected_components(
-                edges, driver_max_edges=0, algorithm=algo
-            ).collect()
-        }
-        assert got == expect, algo
-
-
-def test_cc_algorithm_validated_before_size_gate(spark):
-    """Round-5 review: a typo'd algorithm used to pass silently whenever
-    the small-graph driver path was taken."""
-    edges = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(edges, algorithm="staar")
+    got = {
+        r.doc_id: r.cluster_id
+        for r in connected_components(edges, driver_max_edges=0).collect()
+    }
+    assert got == expect
 
 
 def test_cc_zero_iterations_warns_not_silently_splits(spark):
-    """Round-5 review: hashmin with max_iterations<=0 returned every
-    vertex as its own singleton with NO warning (changed stayed 0)."""
+    """Round-5 review: a zero iteration budget used to return every
+    vertex as its own singleton with NO warning. Star contraction with
+    max_iterations=0 runs one round, which cannot confirm a fixed point
+    (the signature compare needs a second round), so it must warn."""
     edges = spark.createDataFrame([(1, 2), (2, 3)], "doc_a long, doc_b long")
     with pytest.warns(RuntimeWarning, match="did not converge"):
-        connected_components(
-            edges, driver_max_edges=0, algorithm="hashmin", max_iterations=0
-        ).collect()
+        connected_components(edges, driver_max_edges=0, max_iterations=0).collect()
 
 
 def test_cc_stats_contract_on_driver_path(spark):
@@ -496,9 +481,7 @@ def test_cc_star_converging_at_budget_does_not_warn(spark):
     )
     # find the exact convergence round first
     stats: dict = {}
-    out = connected_components(
-        edges, driver_max_edges=0, algorithm="star", stats=stats
-    )
+    out = connected_components(edges, driver_max_edges=0, stats=stats)
     assert {r.cluster_id for r in out.collect()} == {0}
     converge_rounds = stats["rounds"] - 1  # minus the detection round
     with w.catch_warnings():
@@ -506,7 +489,6 @@ def test_cc_star_converging_at_budget_does_not_warn(spark):
         out2 = connected_components(
             edges,
             driver_max_edges=0,
-            algorithm="star",
             max_iterations=converge_rounds,
         )
         assert {r.cluster_id for r in out2.collect()} == {0}

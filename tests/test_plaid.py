@@ -196,9 +196,9 @@ def test_plaid_agrees_with_exact_chamfer_top1(doc_vectors, query_vectors, centro
     got = plaid_topk(doc_vectors, query_vectors, centroids, k=1, nprobe=6, rerank=10)
     plaid_top1 = {r.query_id: r.doc_id for r in got.collect()}
     for q in range(8):
-        qv = query_vectors.where(F.col("query_id") == q).select("embedding")
+        qv = query_vectors.where(F.col("query_id") == q)
         exact = (
-            chamfer_scores(doc_vectors, qv)
+            chamfer_scores(doc_vectors, qv, q_idx_col="vec_id")
             .orderBy(F.desc("chamfer"), F.asc("doc_id"))
             .first()
         )
